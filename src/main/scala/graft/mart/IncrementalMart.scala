@@ -1,7 +1,8 @@
 package graft.mart
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental view maintenance for the mart rollups — the continuous
   * warehouse the reference's nightly full rebuild implies but never built
@@ -12,13 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * The catch is the two COUNT DISTINCT metrics: distinct sums/counts merge
   * trivially, distinct counts do not. The standard IVM answer is support
-  * counts — auxiliary tables holding per-(year, track) and per-(year,
-  * artist) row counts; a batch merges its own counts in, and the distinct
-  * metric is the support table's per-year row count. Support state is
-  * bounded by the number of DISTINCT keys (not facts), partitions on the
-  * same year axis as the rollup, and — unlike a HLL sketch — stays EXACT
-  * and delete-capable (a retraction batch with negative counts would
-  * maintain it too, the classic incremental-view algebra).
+  * counts — per-(year, track) and per-(year, artist) row counts; a batch
+  * merges its own counts in, and the distinct metric is the number of a
+  * year's support rows with a positive count. All of it lives in ONE state
+  * table keyed by (kind, year, key, year_start): one `sums` row per year
+  * (key null), one `track` row per (year, l_partkey) and one `artist` row
+  * per (year, l_suppkey), all with the same sign-mergeable columns (a
+  * track row fills only its count `n`). Support state is bounded by the
+  * number of DISTINCT keys (not facts), and — unlike a HLL sketch —
+  * stays EXACT and delete-capable (a retraction batch with negative
+  * counts maintains it too, the classic incremental-view algebra).
   *
   * The derived metrics (rounded hours, estimated streams) are computed at
   * SERVE time from the exact decimal sums with the IDENTICAL expression
@@ -26,19 +30,28 @@ import org.apache.spark.sql.functions._
   * `dm_yearly_agg`'s DuckDB oracle verbatim — the driver hash proves that
   * state-build + N appends + serve ≡ one full re-aggregation.
   *
-  * Scale shape: a batch append is one partial agg of the batch per state
-  * table (map-side combine, shuffle = distinct batch keys), one merge
-  * groupBy bounded by |state| + |batch keys|, and an overwrite of state
-  * that is ~years × keys rows — never the fact table. Serve reads state
-  * only (plan-asserted in the spec: no lineitem/orders scan).
+  * Scale shape: a fold projects each batch row into its three
+  * contributions, unions them with the prior state and re-aggregates in
+  * ONE groupBy — one shuffle bounded by |state| + |batch keys| and one
+  * write of state that is ~years × keys rows, never the fact table. State
+  * is read with its fixed schema (no inference job). Serve is one
+  * join-free aggregation over the state alone (plan-asserted in the spec:
+  * one scan, no join, no lineitem/orders read).
   */
 object IncrementalMart {
 
+  private val Sums = "sums"
+  private val Track = "track"
+  private val Artist = "artist"
+  private val Keys = Seq("kind", "year", "key", "year_start")
+  private val StateSchema = StructType.fromDDL(
+    "kind STRING, year BIGINT, key BIGINT, year_start TIMESTAMP, n BIGINT, " +
+      "n_nonskip BIGINT, n_full BIGINT, sum_sec DECIMAL(22,2), sum_pct DECIMAL(15,1)")
+
   /** Fold a batch of [[MartQueries.listeningFacts]] rows into the state at
-    * `path` (creating it when absent): exact decimal partial sums merge by
-    * (year, year_start); support counts merge by (year, key). Idempotence
-    * is the caller's contract (the streaming sinks' Bloom anti-join), as
-    * with every append-family primitive.
+    * `path` (creating it when absent). Idempotence is the caller's
+    * contract (the streaming sinks' Bloom anti-join), as with every
+    * append-family primitive.
     */
   def appendToYearlyState(batch: DataFrame, path: String): Unit =
     foldYearlyState(batch, path, 1)
@@ -51,67 +64,47 @@ object IncrementalMart {
   def retractFromYearlyState(batch: DataFrame, path: String): Unit =
     foldYearlyState(batch, path, -1)
 
-  /** The three state tables' (delta, name, keys, summed-cols) quads for a
-    * batch, sign = +1 append / −1 retract.
+  /** The batch's state rows (sign = +1 append / −1 retract) ∪ the state at
+    * `src` (if it exists), re-aggregated by the state key and cast back to
+    * the state schema (sum() widens decimal precision per merge), so any
+    * number of folds keeps one schema.
     */
-  private def stateDeltas(batch: DataFrame, sign: Int): Seq[(DataFrame, String, Seq[String], Seq[String])] = {
-    import batch.sparkSession.implicits._
-    val b = batch.select($"ts_year".as("year"), $"ts_year_start".as("year_start"),
-      $"l_partkey", $"l_suppkey", $"l_quantity", $"sec_played", $"percent_played")
-      .localCheckpoint() // one batch materialization feeds all three folds
-    val s = lit(sign.toLong)
-    Seq(
-      (b.groupBy($"year", $"year_start").agg(
-          (sum($"sec_played") * s).cast("decimal(22,2)").as("sum_sec"),
-          (count(lit(1)) * s).as("n_rows"),
-          (count(when($"l_quantity" > 10, lit(1))) * s).as("n_nonskip"),
-          (sum($"percent_played") * s).cast("decimal(15,1)").as("sum_pct")),
-        "sums", Seq("year", "year_start"), Seq("sum_sec", "n_rows", "n_nonskip", "sum_pct")),
-      (b.groupBy($"year", $"l_partkey").agg((count(lit(1)) * s).as("n")),
-        "tracks", Seq("year", "l_partkey"), Seq("n")),
-      // the artist support rows carry the per-(year, artist) metric sums
-      // beside the distinct-count support n — ONE state tree serves BOTH
-      // the yearly rollup and the ranked top-artists view, and every
-      // column is sign-mergeable so the retraction algebra still holds
-      (b.groupBy($"year", $"l_suppkey").agg(
-          (count(lit(1)) * s).as("n"),
-          (sum($"sec_played") * s).cast("decimal(22,2)").as("sum_sec"),
-          (sum($"percent_played") * s).cast("decimal(15,1)").as("sum_pct"),
-          (count(when($"percent_played" === lit(100.0), lit(1))) * s).as("n_full")),
-        "artists", Seq("year", "l_suppkey"), Seq("n", "sum_sec", "sum_pct", "n_full")))
-  }
-
-  /** delta ∪ (srcTable if it exists) → re-aggregated, schema-fixpoint
-    * (sum() widens decimal precision per merge; cast back to the delta's
-    * types so any number of appends keeps one schema).
-    */
-  private def mergedTable(spark: SparkSession, delta: DataFrame, src: Option[String],
-      keys: Seq[String], sums: Seq[String]): DataFrame = {
-    val outType = sums.map(c => c -> delta.schema(c).dataType).toMap
-    val unioned = src match {
-      case Some(p) =>
-        try delta.unionByName(spark.read.parquet(p))
-        catch { case _: org.apache.spark.sql.AnalysisException => delta }
-      case None => delta
-    }
-    unioned
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col(sums.head)).as(sums.head),
-        sums.tail.map(c => sum(col(c)).as(c)): _*)
-      .select(keys.map(col) ++ sums.map(c => col(c).cast(outType(c)).as(c)): _*)
-  }
-
-  private def foldYearlyState(batch: DataFrame, path: String, sign: Int): Unit = {
+  private def merged(batch: DataFrame, sign: Int, src: Option[String]): DataFrame = {
     val spark = batch.sparkSession
-    stateDeltas(batch, sign).foreach { case (delta, sub, keys, sums) =>
-      mergedTable(spark, delta, Some(s"$path/$sub"), keys, sums)
-        .localCheckpoint() // materialize before overwriting what it reads
-        .write.mode("overwrite").parquet(s"$path/$sub")
+    import spark.implicits._
+    def signed(c: Column): Column = if (sign > 0) c else -c
+    def part(kind: String, key: Column): Column =
+      struct(lit(kind).as("kind"), key.cast("long").as("key"))
+    // a track row only supports the distinct count: its measures stay null
+    def measure(c: Column): Column = when($"c.kind" =!= Track, signed(c))
+    // every fact contributes one row of each kind
+    val delta = batch
+      .select(explode(array(part(Sums, lit(null)), part(Track, $"l_partkey"),
+          part(Artist, $"l_suppkey"))).as("c"),
+        $"ts_year", $"ts_year_start", $"l_quantity", $"sec_played", $"percent_played")
+      .select($"c.kind".as("kind"), $"ts_year".as("year"), $"c.key".as("key"),
+        $"ts_year_start".as("year_start"), signed(lit(1L)).as("n"),
+        measure(when($"l_quantity" > 10, 1L).otherwise(0L)).as("n_nonskip"),
+        measure(when($"percent_played" === lit(100.0), 1L).otherwise(0L)).as("n_full"),
+        measure($"sec_played").as("sum_sec"), measure($"percent_played").as("sum_pct"))
+    val prior = src.flatMap { p =>
+      try Some(readState(spark, p))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
+    val measures = StateSchema.fieldNames.toSeq.drop(Keys.length)
+    prior.fold(delta)(delta.unionByName)
+      .groupBy(Keys.map(col): _*)
+      .agg(sum(measures.head).as(measures.head), measures.tail.map(c => sum(c).as(c)): _*)
+      .select(StateSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
+
+  private def foldYearlyState(batch: DataFrame, path: String, sign: Int): Unit =
+    merged(batch, sign, Some(path))
+      .localCheckpoint() // materialize before overwriting what it reads
+      .write.mode("overwrite").parquet(path)
 
   /** Versioned fold for the STREAMING sink ([[graft.streaming.MartStream]]):
-    * state at `srcVersion` + batch → a NEW `v<dstVersion>` directory tree,
+    * state at `srcVersion` + batch → a NEW `v<dstVersion>` directory,
     * never in-place — source and destination differ, so no checkpoint is
     * needed and a crashed write never corrupts served state (the pointer
     * still names the old version). Deterministic given (src state, batch),
@@ -119,13 +112,12 @@ object IncrementalMart {
     * version instead of double-counting.
     */
   private[graft] def foldVersioned(batch: DataFrame, root: String,
-      srcVersion: Option[Long], dstVersion: Long): Unit = {
-    val spark = batch.sparkSession
-    stateDeltas(batch, 1).foreach { case (delta, sub, keys, sums) =>
-      mergedTable(spark, delta, srcVersion.map(v => s"$root/v$v/$sub"), keys, sums)
-        .write.mode("overwrite").parquet(s"$root/v$dstVersion/$sub")
-    }
-  }
+      srcVersion: Option[Long], dstVersion: Long): Unit =
+    merged(batch, 1, srcVersion.map(v => s"$root/v$v"))
+      .write.mode("overwrite").parquet(s"$root/v$dstVersion")
+
+  private def readState(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(StateSchema).parquet(path)
 
   /** Serve the rollup from state alone — the fact table is never read.
     * Metric expressions are shared shapes with [[MartQueries.yearlyAgg]]
@@ -134,17 +126,20 @@ object IncrementalMart {
     */
   def serveYearlyAgg(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val sums = spark.read.parquet(s"$path/sums")
-    // support > 0 guards the delete/retraction algebra: a key whose counts
-    // cancelled out no longer exists
-    val tracks = spark.read.parquet(s"$path/tracks").filter($"n" > 0)
-      .groupBy($"year").agg(count(lit(1)).as("distinct_tracks"))
-    val artists = spark.read.parquet(s"$path/artists").filter($"n" > 0)
-      .groupBy($"year").agg(count(lit(1)).as("distinct_artists"))
-    sums.join(tracks, Seq("year")).join(artists, Seq("year"))
+    // a year has exactly one sums row, so max() picks it without widening
+    // its type; support > 0 guards the delete/retraction algebra: a key
+    // whose counts cancelled out no longer exists
+    def sums(c: String) = max(when($"kind" === Sums, col(c))).as(c)
+    def live(kind: String) = count(when($"kind" === kind && $"n" > 0, lit(1)))
+    readState(spark, path)
+      .groupBy($"year", $"year_start")
+      .agg(sums("sum_sec"), sums("n"), sums("n_nonskip"), sums("sum_pct"),
+        live(Track).as("distinct_tracks"), live(Artist).as("distinct_artists"))
+      // a year with no live track or artist is retracted out of the rollup
+      .filter($"distinct_tracks" > 0 && $"distinct_artists" > 0)
       .select($"year", $"year_start",
         MartQueries.r1($"sum_sec".cast("double") / lit(3600.0)).as("hours_listened"),
-        $"n_rows".as("total_streams_sessions"),
+        $"n".as("total_streams_sessions"),
         $"n_nonskip".as("nonskip_sessions"),
         MartQueries.r0($"sum_pct".cast("double") / lit(100.0)).as("total_estimated_streams"),
         $"distinct_tracks", $"distinct_artists")
@@ -169,7 +164,7 @@ object IncrementalMart {
     serveYearlyAgg(spark, yearlyStatePathFor(spark, dir))
 
   /** The build-once (session, dir) lifecycle shared by every entry served
-    * from the mart state tree.
+    * from the mart state table.
     */
   private def yearlyStatePathFor(spark: SparkSession, dir: String): String = {
     import spark.implicits._
@@ -190,9 +185,9 @@ object IncrementalMart {
   }
 
   /** §2 entry `dm_top_artists_incremental` — ONE STATE, MANY VIEWS: the
-    * ranked 1997 top-artists view served from the SAME state tree as the
-    * yearly rollup (the artist support table's metric sums), never the
-    * fact table. The supplier dim joins at serve time (dims are not
+    * ranked 1997 top-artists view served from the SAME state table as the
+    * yearly rollup (the `artist` rows' metric sums), never the fact
+    * table. The supplier dim joins at serve time (dims are not
     * state); the post-join re-aggregation by s_name merges exact decimal
     * sums, so the result is bit-identical to the one-shot ranking and the
     * entry carries its own DuckDB oracle (the cover-art column is the one
@@ -202,16 +197,16 @@ object IncrementalMart {
   def dmTopArtistsIncremental(spark: SparkSession, dir: String): DataFrame =
     serveTopArtists(spark, yearlyStatePathFor(spark, dir), dir)
 
-  /** Serve core over any state tree — shared with the STREAMED state
+  /** Serve core over any state table — shared with the STREAMED state
     * ([[graft.streaming.MartStream.serveTopArtists]]), so a backfilled
     * and a streamed mart cannot rank differently.
     */
   private[graft] def serveTopArtists(spark: SparkSession, path: String, dir: String): DataFrame = {
     import spark.implicits._
     val sup = graft.Tables.supplier(spark, dir).select($"s_suppkey", $"s_name")
-    spark.read.parquet(s"$path/artists")
-      .filter($"year" === 1997L && $"n" > 0)
-      .join(broadcast(sup), $"l_suppkey" === $"s_suppkey")
+    readState(spark, path)
+      .filter($"kind" === Artist && $"year" === 1997L && $"n" > 0)
+      .join(broadcast(sup), $"key" === $"s_suppkey")
       .groupBy($"s_name".as("artist"))
       .agg(sum($"sum_sec").as("sum_sec"), sum($"n").as("times_played"),
         sum($"sum_pct").as("sum_pct"), sum($"n_full").as("full_real_streams"))

@@ -269,9 +269,11 @@ object KnnGraph {
     * Now both vectors attach per round at the score join only (qv by a
     * query_id equi-join, nv by the node join), so exactly ONE exchange
     * per round carries an array and every other stream ships 3 longs.
-    * `queries` and `corpusVec` are checkpointed by the callers — each
-    * is referenced once per round and the lazy form re-ran the shared
-    * quantized scan per reference.
+    * `queries` is checkpointed here and `corpusVec` by the full-build and
+    * from-index callers — each is referenced once per round and the lazy
+    * form re-ran the shared quantized scan per reference. The append and
+    * orphan-relink paths pass an unmaterialized `corpusVec`, so there
+    * each round still re-runs that scan.
     */
   private def beamSearch(queries0: DataFrame, adj: DataFrame, seeds: DataFrame,
       corpusVec: DataFrame): DataFrame = {

@@ -50,8 +50,9 @@ object PinnedLayout {
     */
   def partitionsForRows(spark: org.apache.spark.sql.SparkSession, rows: Long): Int = {
     val cap = spark.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(cap.toLong,
-      (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
+    // ceil(rows / RowsPerPartition) without the overflow of rows + 2^20 - 1
+    val needed = rows / RowsPerPartition + (if (rows % RowsPerPartition > 0) 1 else 0)
+    math.max(1L, math.min(cap.toLong, needed)).toInt
   }
 
   private def partitionsFor(df: DataFrame, rows: Long): Int =

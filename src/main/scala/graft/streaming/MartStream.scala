@@ -9,21 +9,22 @@ import graft.mart.IncrementalMart
 
 /** Streaming maintenance of the incremental mart rollup — the dashboard
   * that is always current: fact micro-batches fold into the persisted
-  * mergeable state ([[IncrementalMart]]'s sums + support tables), so the
+  * mergeable state ([[IncrementalMart]]'s sums + support rows), so the
   * yearly rollup refreshes at O(state + batch) per batch while serving
   * bit-identical numbers to a full re-aggregation.
   *
   * Exactly-once under at-least-once delivery by VERSIONED COMMIT (the
   * MVCC discipline, stricter than the marker-table guard the anomaly fold
-  * uses, because this state spans three tables that cannot be overwritten
-  * atomically together): batch `id` folds (state at `_latest`) + batch
-  * into a fresh `v<id>/` tree — never in place — and only then the
-  * `_latest` pointer file is atomically replaced. A retry that crashed
-  * BEFORE the pointer moved recomputes the identical `v<id>` from the
-  * identical inputs (the fold is deterministic); a retry AFTER sees the
-  * pointer already at `id` and no-ops. Served state is always a fully
-  * written version. Superseded versions are garbage, reclaimed by
-  * [[vacuumVersions]] (the compaction-cadence discipline).
+  * uses, because a multi-file Parquet overwrite is not atomic and a
+  * reader or a crash could observe it half-written): batch `id` folds
+  * (state at `_latest`) + batch into a fresh `v<id>/` table — never in
+  * place — and only then the `_latest` pointer file is atomically
+  * replaced. A retry that crashed BEFORE the pointer moved recomputes
+  * the identical `v<id>` from the identical inputs (the fold is
+  * deterministic); a retry AFTER sees the pointer already at `id` and
+  * no-ops. Served state is always a fully written version. Superseded
+  * versions are garbage, reclaimed by [[vacuumVersions]] (the
+  * compaction-cadence discipline).
   *
   * `facts` must be a streaming DataFrame in the
   * [[graft.mart.MartQueries.listeningFacts]] shape.

@@ -911,6 +911,17 @@ class PinnedLayoutSpec extends SparkSuite {
     assert(exchanges == 0,
       s"co-partitioned sized pins must join exchange-free:\n${joined.queryExecution.executedPlan}")
   }
+
+  test("partitionsForRows is a ceiling that caps instead of overflowing") {
+    val cap = spark.sessionState.conf.numShufflePartitions
+    def parts(rows: Long) = plans.PinnedLayout.partitionsForRows(spark, rows)
+    assert(parts(0L) == 1)
+    assert(parts(1L) == 1)
+    assert(parts(1L << 20) == 1)
+    assert(parts((1L << 20) + 1) == math.min(2, cap))
+    // rows + 2^20 - 1 wraps negative here; the count must still cap
+    assert(parts(Long.MaxValue) == cap)
+  }
 }
 
 class PlanSpec extends SparkSuite {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** The incremental mart rollup: state-fold ≡ one-shot aggregation, serve
@@ -26,6 +27,19 @@ class MartIvmSpec extends SparkSuite {
     // second call: cache hit, same rows
     assert(mart.IncrementalMart.dmYearlyAggIncremental(spark, sf)
       .collect().map(_.toSeq).toSeq == inc)
+  }
+
+  test("serve is one join-free aggregation over one scan of the state table") {
+    val df = mart.IncrementalMart.dmYearlyAggIncremental(spark, sf)
+    df.collect()
+    val statePath = mart.IncrementalMart.persistedYearlyStatePath(spark, sf)
+      .getOrElse(fail("entry did not populate the state cache"))
+    val plan = tools.PlanWalk.flatten(df.queryExecution.executedPlan)
+    val joins = plan.collect { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"serve plan joins: ${joins.mkString(", ")}")
+    val scans = plan.collect { case f: FileSourceScanExec => f.toString }
+    assert(scans.length == 1 && scans.head.contains(statePath),
+      s"serve plan must scan the state table exactly once:\n${scans.mkString("\n")}")
   }
 
   test("one state, many views: top-artists serves from the same state, facts unread") {
