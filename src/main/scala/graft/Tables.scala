@@ -1,16 +1,67 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's star-schema testdata (see TESTDATA.md).
   *
-  * Each loader is a plain parquet scan: projection and predicates applied by
+  * Each loader is a parquet scan: projection and predicates applied by
   * callers are pushed into the scan by Catalyst (verified in PlanSpec), so
   * at 100 TB each query reads only the columns/row-groups it needs.
+  *
+  * A bare `spark.read.parquet(path)` runs a Spark job to infer the schema
+  * from the file footers on every call, before any action. [[table]]
+  * infers once per file version and declares the recorded schema on later
+  * reads, which run no job and resolve to the same relation (Spark makes
+  * both the inferred and a declared schema nullable). The version key is
+  * the qualified path, the length and modification time of every file
+  * under it (stat'ed through the Hadoop `FileSystem`), and the session's
+  * explicitly set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * values, which steer the Parquet-to-Spark type conversion (e.g.
+  * `nanosAsLong`): a rewritten table or a changed setting re-infers. A
+  * path that cannot be stat'ed (missing, or a glob) is read as before, so
+  * callers see Spark's own error. The map holds only `StructType`s, one per
+  * table version read, and no session or data, so it is not a session
+  * cache: the same file under the same settings infers to the same schema
+  * in any session, and a racing `putIfAbsent` of that value needs no lock.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+      parquetConf: Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = schemaKey(spark, path)
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.putIfAbsent(_, df.schema))
+        df
+    }
+  }
+
+  // listFiles of a single file yields that file; of a missing path or a
+  // glob (no FileSystem expands one) it throws
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toList.sorted
+      Some(SchemaKey(fs.makeQualified(p).toString, files,
+        spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted))
+    } catch {
+      case _: java.io.IOException => None
+    }
 
   def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")

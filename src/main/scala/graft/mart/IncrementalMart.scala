@@ -50,8 +50,9 @@ object IncrementalMart {
 
   /** Fold a batch of [[MartQueries.listeningFacts]] rows into the state at
     * `path` (creating it when absent). Idempotence is the caller's
-    * contract (the streaming sinks' Bloom anti-join), as with every
-    * append-family primitive.
+    * contract (the streamed mart's versioned commits,
+    * [[graft.streaming.MartStream]]), as with every append-family
+    * primitive.
     */
   def appendToYearlyState(batch: DataFrame, path: String): Unit =
     foldYearlyState(batch, path, 1)

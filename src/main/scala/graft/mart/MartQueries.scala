@@ -18,8 +18,12 @@ import graft.Tables
   * conditional counts + distinct counts, ranked top-N with deterministic
   * tie-breaks, parent-variant mapping via grouped min + left join.
   *
-  * Scale: orders side of the fact join shuffles on orderkey once and is
-  * shared by every mart query; part/supplier dims are broadcast.
+  * Scale: every mart query plans its own fact join; nothing is shared
+  * across calls. While the orders side (orderkey, date and its calendar
+  * keys) fits the broadcast threshold, as at sf0.01 and sf0.1, the plan
+  * broadcasts it and lineitem streams through without a shuffle; past the
+  * threshold it becomes a sort-merge join that shuffles both sides on
+  * orderkey. part/supplier dims are broadcast.
   */
 object MartQueries {
 
@@ -180,10 +184,6 @@ object MartQueries {
     y && m
   }
 
-  /** dm.top_artists(filter_year, filter_month, return_limit)
-    * (dm_ddl.sql:119) — ranked artists with optional year/month filters;
-    * supplier dim broadcast; deterministic tie-break.
-    */
   /** (track partkey → cover_art_url) from the etl_json_nested extraction,
     * broadcast-joined into the dm.top_* outputs. The reference's top_*
     * return `max(cover_art_url)` per group ("random track cover art should
@@ -198,6 +198,10 @@ object MartQueries {
 
   private def coverAgg: Column = max(col("cover_art_url")).as("cover_art_url")
 
+  /** dm.top_artists(filter_year, filter_month, return_limit)
+    * (dm_ddl.sql:119) — ranked artists with optional year/month filters;
+    * supplier dim broadcast; deterministic tie-break.
+    */
   def topArtists(spark: SparkSession, dir: String,
       filterYear: Option[Int] = Some(1997), filterMonth: Option[Int] = None,
       returnLimit: Int = 10): DataFrame = {

@@ -95,12 +95,19 @@ object Recommend {
   /** Re-declare the user_id layout on a frame DERIVED from a pinned one
     * without any intervening exchange (a window/filter/projection chain)
     * after its own checkpoint — the checkpoint records
-    * UnknownPartitioning; the declared count is checked against the RDD,
-    * so a derivation that DID re-exchange fails loudly.
+    * UnknownPartitioning. A derivation that DID re-exchange fails loudly:
+    * its physical plan (the one the checkpoint executes, so walking it
+    * runs no job) must hold no shuffle exchange, and the declared count
+    * is checked against the RDD.
     */
   private[graft] def redeclareByUser(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val spark = df.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
+    val plan = df.queryExecution.executedPlan
+    if (graft.tools.PlanWalk.collectAll(plan) { case e: ShuffleExchangeExec => e }.nonEmpty)
+      throw new IllegalArgumentException(
+        s"redeclareByUser: the derivation re-exchanges, so its rows are no longer laid out by user_id:\n$plan")
     org.apache.spark.sql.graftshim.declareHashPartitioned(
       df.localCheckpoint(), n, "user_id")
   }
@@ -332,9 +339,9 @@ object Recommend {
     // carries the (user, artist) count aggregate (hash(user_id) satisfies
     // the (user_id, artist_id) clustering), the capping window, AND both
     // self-join sides. The capped table's checkpoint would forget that
-    // layout (UnknownPartitioning), so it is RE-DECLARED with the same
-    // (truthful) partition count — no exchange ran between the pin and
-    // the checkpoint. Before: the count groupBy, the window, and each
+    // layout (UnknownPartitioning), so it is RE-DECLARED through
+    // redeclareByUser, which checks that no exchange ran between the pin
+    // and the checkpoint. Before: the count groupBy, the window, and each
     // self-join side paid separate exchanges of the same ~0.6M-row
     // stream — 4 exchanges → 2. The count aggregate keeps its OWN
     // (user, artist) exchange so map-side partial aggregation still
@@ -355,12 +362,11 @@ object Recommend {
     val byUser = org.apache.spark.sql.graftshim.declareHashPartitioned(
       uaCounts.repartition(nPin, $"user_id").localCheckpoint(), nPin, "user_id")
     val wcap = Window.partitionBy($"user_id").orderBy($"n_listens".desc, $"artist_id")
-    val ua = org.apache.spark.sql.graftshim.declareHashPartitioned(
+    // one fact scan: feeds na and both self-join sides
+    val ua = redeclareByUser(
       byUser.withColumn("r", row_number().over(wcap))
         .filter($"r" <= maxItemsPerUser)
-        .select($"user_id", $"artist_id")
-        .localCheckpoint(), // one fact scan: feeds na and both self-join sides
-      nPin, "user_id")
+        .select($"user_id", $"artist_id"))
     val na = ua.groupBy($"artist_id").agg(count(lit(1)).as("n_users"))
     val a = ua.select($"user_id", $"artist_id".as("a"))
     val b = ua.select($"user_id", $"artist_id".as("b"))

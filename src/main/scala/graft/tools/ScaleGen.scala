@@ -77,7 +77,7 @@ object ScaleGen {
   }
 
   def generate(spark: SparkSession, baseDir: String, outDir: String, mult: Int): Unit = {
-    def base(name: String) = spark.read.parquet(s"$baseDir/$name.parquet")
+    def base(name: String) = graft.Tables.table(spark, baseDir, name)
     def write(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
       System.err.println(s"[scalegen] wrote $name")

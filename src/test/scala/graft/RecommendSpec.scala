@@ -202,4 +202,16 @@ class RecommendSpec extends SparkSuite {
     val lifts = rows.map(_.getAs[Double]("lift")).toSeq
     assert(lifts == lifts.sorted.reverse)
   }
+
+  test("redeclareByUser: a re-exchanged derivation throws, the capped derivation passes") {
+    import spark.implicits._
+    val lc = ops.Recommend.pinProfileByUser(ops.Recommend.listenCounts(spark, sf))
+    assert(ops.Recommend.redeclareByUser(ops.Recommend.cappedFrom(lc)).count() > 0)
+    // same partition count as the pin, so the RDD count check alone passes
+    // it; the rows are laid out by item_id, not user_id
+    val n = spark.sessionState.conf.numShufflePartitions
+    val e = intercept[IllegalArgumentException](
+      ops.Recommend.redeclareByUser(lc.repartition(n, $"item_id")))
+    assert(e.getMessage.contains("re-exchanges"), e.getMessage)
+  }
 }

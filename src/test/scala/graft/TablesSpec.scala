@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftshim.JobCount
+import org.apache.spark.sql.{AnalysisException, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,7 +14,10 @@ import org.apache.spark.sql.types._
   *  - every live table loads and `events.ts` normalizes to TimestampType;
   *  - each dtype the adaptive loader claims to support is exercised against
   *    a written fixture (raw-nanos long, TIMESTAMP_NTZ, TIMESTAMP);
-  *  - an unsupported dtype fails loudly in the loader, not downstream.
+  *  - an unsupported dtype fails loudly in the loader, not downstream;
+  *  - a table's schema is inferred once per file version: warm reads run
+  *    no Spark job, and a rewritten table or a changed Parquet setting
+  *    re-infers.
   */
 class TablesSpec extends SparkSuite {
 
@@ -114,5 +119,71 @@ class TablesSpec extends SparkSuite {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("events.ts"), e.getMessage)
+  }
+
+  test("a warm read constructs without a Spark job") {
+    Tables.lineitem(spark, sf)
+    mart.MartQueries.topArtists(spark, sf)
+    assert(JobCount(spark.sparkContext)(Tables.lineitem(spark, sf)) == 0)
+    assert(JobCount(spark.sparkContext)(mart.MartQueries.topArtists(spark, sf)) == 0)
+  }
+
+  test("a missing table fails as before; a rewritten table re-infers, as a directory and as one file") {
+    import spark.implicits._
+    val dir = fixtureDir()
+    // nothing to stat: read as before, so Spark's own error surfaces
+    val missing = intercept[AnalysisException](Tables.table(spark, dir, "t"))
+    assert(missing.getMessage.contains("PATH_NOT_FOUND"), missing.getMessage)
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    Seq((2L, 3.0, true)).toDF("x", "y", "z").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val got = Tables.table(spark, dir, "t")
+    assert(got.columns.toSeq == Seq("x", "y", "z"))
+    assert(got.collect().toSeq == Seq(Row(2L, 3.0, true)))
+
+    // a single-file table, like the testdata's, replaced by a file of
+    // another schema
+    def partFile(d: String) = new java.io.File(d).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val one = java.nio.file.Paths.get(dir, "one.parquet")
+    java.nio.file.Files.copy(partFile(s"$dir/t.parquet"), one)
+    assert(Tables.table(spark, dir, "one").columns.toSeq == Seq("x", "y", "z"))
+    Seq(("b", 4)).toDF("s", "i").write.parquet(s"$dir/u.parquet")
+    java.nio.file.Files.copy(partFile(s"$dir/u.parquet"), one,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.table(spark, dir, "one").collect().toSeq == Seq(Row("b", 4)))
+  }
+
+  test("flipping nanosAsLong re-infers a TIMESTAMP(NANOS) table") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = fixtureDir()
+    // Spark cannot write TIMESTAMP(NANOS); parquet-mr's example writer can
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), spark.sparkContext.hadoopConfiguration))
+      .withType(schema).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1704067200L * 1000000000L + 1L))
+    w.close()
+
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.get(key)
+    assert(prev == "true")
+    assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
+    assert(Tables.events(spark, dir).select(col("ts").cast("string")).first().getString(0) ==
+      "2024-01-01 00:00:00")
+    try {
+      spark.conf.set(key, "false")
+      // re-inferred without the flag, Spark rejects the nanos column; a
+      // schema recorded under the flag would have read it as a long
+      val e = intercept[AnalysisException](Tables.table(spark, dir, "events"))
+      assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
+    } finally spark.conf.set(key, prev)
+    assert(JobCount(spark.sparkContext)(
+      assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)) == 0)
   }
 }
